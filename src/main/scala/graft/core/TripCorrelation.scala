@@ -17,7 +17,11 @@ import graft.schema._
   * Streaming form: `flatMapGroupsWithState` keyed by `trip_id` — the
   * Spark-native replacement for the reference's per-record DynamoDB
   * get_item/put_item round-trips (reference: trip_processor.py:54-78).
-  * One shuffle per micro-batch replaces 2 RPCs per trip.
+  * One shuffle per micro-batch replaces 2 RPCs per trip. Events are
+  * grouped by the `trip_id` column, not a `groupByKey` lambda, so rows
+  * reach the shuffle without a decode-to-object-and-back per event; the
+  * state key is the same string either way, and checkpoints written
+  * under the lambda grouping restart under this one.
   *
   * Two fidelity modes (SURVEY.md §7.4):
   *  - faithful=true  — reproduces the reference's lossy accidents:
@@ -115,7 +119,7 @@ object TripCorrelation {
         (events.withWatermark("event_ts", watermarkDelay), GroupStateTimeout.EventTimeTimeout)
       else (events, GroupStateTimeout.NoTimeout)
     input
-      .groupByKey(_.trip_id)
+      .groupBy(col("trip_id")).as[String, TripEvent]
       .flatMapGroupsWithState(OutputMode.Update, timeoutConf)(
         processGroup(faithful, timeoutMs))
   }
@@ -128,7 +132,7 @@ object TripCorrelation {
       faithful: Boolean = true): Dataset[TripRecord] = {
     import events.sparkSession.implicits._
     events
-      .groupByKey(_.trip_id)
+      .groupBy(col("trip_id")).as[String, TripEvent]
       .flatMapGroups { (key, it) =>
         var st = CorrelationState(None, None)
         val out = Seq.newBuilder[TripRecord]

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -71,37 +71,65 @@ object EventReader {
     df.repartition(shards, col(keyCol))
       .select(col(keyCol).as("key"), to_json(struct(df.columns.map(col): _*)).as("value"))
 
+  /** The raw line's column beside the decoded fields: a schema may carry
+    * its own `value` field (q168's does).
+    */
+  private val RawCol = "__raw_line"
+
+  /** One row per input line: the raw line plus the decoded fields, all
+    * null when the line is null or does not parse.
+    */
+  private def parsed(df: DataFrame, schema: StructType): DataFrame =
+    df.select(col("value").as(RawCol), inline(array(from_json(col("value"), schema))))
+
   /** P2/S4 consumer side: decode a `value` JSON column against a schema;
     * corrupt payloads become null rows and are dropped (at-least-once,
     * poison records skipped — reference: trip_processor.py:82-84).
+    *
+    * Exactly one `from_json` per line, as the reference's one
+    * `json.loads` per record. The parse sits behind a Generate
+    * (`inline` of a one-element array) on purpose: over a plain
+    * projection, Catalyst pushes the null-key filter beneath it and
+    * `OptimizeJsonExprs` gives every field test its own pruned-schema
+    * parse — 3 parses per start line, and 7 per end line once the
+    * correlator's telemetry-quad tests join them. No predicate moves
+    * below a Generate, so the line is parsed once whatever sits above.
     */
   def decodeJson(df: DataFrame, schema: StructType): DataFrame =
-    df.select(from_json(col("value"), schema).as("r"))
-      .where(col("r").isNotNull && col("r.trip_id").isNotNull)
-      .select(col("r.*"))
+    parsed(df, schema).where(col("trip_id").isNotNull).drop(RawCol)
 
   /** DLQ side output (SURVEY.md §2.7): the value lines that fail to
     * decode against `schema` — the records the reference's per-record
     * try/except silently swallowed (trip_processor.py:82-84), exposed as
-    * a queryable stream/frame instead. Works on the same input frame as
-    * [[decodeJson]]; together they partition it.
+    * a queryable stream/frame instead. Derived from the same parse as
+    * [[decodeJson]]; together they partition the input frame.
     */
-  def corruptRecords(df: DataFrame, schema: StructType): DataFrame = {
-    val r = from_json(col("value"), schema)
+  def corruptRecords(df: DataFrame, schema: StructType): DataFrame =
     // includes NULL values (tombstones): every input row lands in
     // exactly one of decodeJson / corruptRecords — full accountability
-    df.where(col("value").isNull ||
-        r.isNull || r.getField("trip_id").isNull)
-      .select(col("value").as("raw"))
-  }
+    parsed(df, schema).where(col("trip_id").isNull).select(col(RawCol).as("raw"))
 
   /** S5: tag + union the two event kinds into the single correlator
     * input (the `eventSourceARN` split analog,
-    * reference: trip_processor.py:39).
+    * reference: trip_processor.py:39). Built from columns: each side
+    * becomes a struct of its decoded fields beside a typed null for the
+    * other side, so no row is turned into a Scala object and back
+    * before the correlation shuffle.
     */
   def taggedUnion(spark: SparkSession, starts: Dataset[TripStart], ends: Dataset[TripEnd]): Dataset[TripEvent] = {
     import spark.implicits._
-    starts.map(TripEvent.ofStart _).unionByName(ends.map(TripEvent.ofEnd _))
+    val startType = Encoders.product[TripStart].schema
+    val endType = Encoders.product[TripEnd].schema
+    def side(fields: StructType) =
+      struct(fields.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    def tagged(kind: String, start: Column, end: Column, eventTs: String) =
+      Seq(col("trip_id"), lit(kind).as("kind"), start.as("start"), end.as("end"),
+        col(eventTs).as("event_ts"))
+    starts.select(tagged(TripEvent.KindStart, side(startType),
+        lit(null).cast(endType), "pickup_datetime"): _*)
+      .unionByName(ends.select(tagged(TripEvent.KindEnd, lit(null).cast(startType),
+        side(endType), "dropoff_datetime"): _*))
+      .as[TripEvent]
   }
 
   /** Streaming S4: JSON value stream → typed start events. */

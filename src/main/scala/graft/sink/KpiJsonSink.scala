@@ -2,7 +2,7 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Single-object dated JSON sink (SURVEY.md §2.1 S12).
@@ -30,14 +30,25 @@ object KpiJsonSink {
       .select(col("date"), to_json(struct(kpiDocs.columns.map(col): _*)).as("js"))
       .collect()
     val base = new Path(outDir)
-    val fs = base.getFileSystem(
-      kpiDocs.sparkSession.sparkContext.hadoopConfiguration)
+    // One object per day and nothing beside it: a checksummed (local)
+    // filesystem would add a `.<date>.json.crc` sidecar, so write through
+    // its raw filesystem. `setWriteChecksum(false)` is no substitute: the
+    // instance is cached and shared, and the flag would turn checksums off
+    // for every writer in the JVM (state store, parquet) too.
+    val (fs, checksummed) = base.getFileSystem(
+        kpiDocs.sparkSession.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => (c.getRawFileSystem, Some(c))
+      case other => (other, None)
+    }
     rows.toSeq
       .filter(!_.isNullAt(0))
       .map { r =>
         val (date, json) = (r.getString(0), r.getString(1))
         val month = date.substring(0, 7) // P9 month-prefix partition
         val path = new Path(new Path(base, month), s"$date.json")
+        // a sidecar left by an earlier checksummed publish would no
+        // longer match the rewritten document
+        checksummed.foreach(c => fs.delete(c.getChecksumFile(path), false))
         val out = fs.create(path, true)
         try out.write(json.getBytes(StandardCharsets.UTF_8))
         finally out.close()

@@ -13,8 +13,8 @@ import graft.ingest.EventReader
   */
 class GoldenKpiSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
-  private val startCsv = "/root/reference/data/trip_start.csv"
-  private val endCsv = "/root/reference/data/trip_end.csv"
+  private def startCsv = ReferenceFixture.path("trip_start.csv")
+  private def endCsv = ReferenceFixture.path("trip_end.csv")
 
   // BASELINE.md "float64 recompute" column (engine computes in double).
   private val golden = Map(

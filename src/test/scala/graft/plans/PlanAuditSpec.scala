@@ -40,6 +40,29 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
       plans(name).toLowerCase should not include "lambdafunction"
     }
 
+  /** `from_json` evaluations left in an optimized plan. */
+  private def jsonParses(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+      }.size).sum
+    }.sum
+
+  test("trip events are parsed once per line: one from_json per decoded side") {
+    import org.apache.spark.sql.functions._
+    // a range-backed feed, so the optimizer cannot fold the parse away
+    val lines = spark.range(4).select(concat(lit("""{"trip_id":"t"""),
+      col("id").cast("string"), lit("\"}")).as("value"))
+    val starts = graft.ingest.EventReader.decodeStartStream(spark, lines).toDF()
+    val ends = graft.ingest.EventReader.decodeEndStream(spark, lines).toDF()
+    jsonParses(starts) shouldBe 1
+    jsonParses(ends) shouldBe 1
+    jsonParses(graft.ingest.EventReader.corruptRecords(
+      lines, graft.schema.TripSchemas.tripEndWireSchema)) shouldBe 1
+    // the correlator's key and telemetry-quad tests add no parse
+    jsonParses(graft.core.TripCorrelation.correlate(starts, ends)) shouldBe 2
+  }
+
   test("q01 filters are pushed down to the parquet scan") {
     // FormattedMode is the only mode that renders the scan's
     // `PushedFilters: [IsNotNull(...), ...]` untruncated; an empty

@@ -45,6 +45,44 @@ class KpiJsonSinkSpec extends AnyFunSuite with Matchers with SparkTestBase {
     Files.exists(Paths.get(out, "2024-05", "2024-05-25.json")) shouldBe true
   }
 
+  private def listing(dir: java.nio.file.Path): Seq[String] =
+    dir.toFile.list().toSeq.sorted
+
+  test("a published month directory holds exactly the KPI documents, no .crc sidecars") {
+    import spark.implicits._
+    val twoDays = sampleTrips.unionByName(Seq(
+        ("t4", TripSchemas.StatusCompleted, 12.0, Date.valueOf("2024-05-26")))
+      .toDF("trip_id", "status", "fare_amount", "date")
+      .withColumn("dropoff_datetime",
+        org.apache.spark.sql.functions.lit(null).cast("timestamp")))
+    val out = Files.createTempDirectory("graft-kpi")
+    KpiJsonSink.writeDaily(
+      KpiAggregation.kpiDocument(KpiAggregation.dailyKpis(twoDays)), out.toString)
+    listing(out.resolve("2024-05")) shouldBe Seq("2024-05-25.json", "2024-05-26.json")
+
+    val table = Files.createTempDirectory("graft-kpi").resolve("trips").toString
+    val jobOut = Files.createTempDirectory("graft-kpi-out")
+    TripTableSink.writeSnapshot(sampleTrips, table)
+    DailyKpiJob.run(spark, table, jobOut.toString, Some("2024-05-25"))
+    listing(jobOut.resolve("2024-05")) shouldBe Seq("2024-05-25.json")
+  }
+
+  test("republishing over a checksummed earlier write drops its stale sidecar") {
+    val out = Files.createTempDirectory("graft-kpi")
+    val doc = new org.apache.hadoop.fs.Path(out.resolve("2024-05").resolve("2024-05-25.json").toString)
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val old = local.create(doc, true)
+    try old.write("{}".getBytes("UTF-8")) finally old.close()
+    listing(out.resolve("2024-05")) should contain(".2024-05-25.json.crc")
+    KpiJsonSink.writeDaily(
+      KpiAggregation.kpiDocument(KpiAggregation.dailyKpis(sampleTrips)), out.toString)
+    listing(out.resolve("2024-05")) shouldBe Seq("2024-05-25.json")
+    // a checksummed reader sees the new bytes, not a checksum mismatch
+    val in = local.open(doc)
+    try new String(in.readAllBytes(), "UTF-8") should include(""""count_trips":2""")
+    finally in.close()
+  }
+
   test("DailyKpiJob on an append-delta table does not double-count redeliveries") {
     import spark.implicits._
     val table = Files.createTempDirectory("graft-kpi").resolve("trips").toString
