@@ -10,6 +10,22 @@ import org.apache.spark.sql.SparkSession
   * settings hold: AQE coalesces the 32-partition default up or down at
   * runtime from map-output statistics, so the static number only seeds
   * the initial plan.
+  *
+  * Generated code is shared across streaming queries. Spark's
+  * `CodeGenerator` cache key is `(classloader, generated source)`.
+  * Every streaming query runs in a session cloned from the caller's,
+  * and with `spark.sql.artifact.isolation.enabled` on (Spark 4's
+  * default) the clone gets a new artifact-session UUID, for which the
+  * executor builds a new isolated classloader. Each new query, such as
+  * every periodic `Trigger.AvailableNow` run of
+  * [[graft.streaming.TripStreamJob]], therefore missed the cache and
+  * recompiled every generated class. [[configure]] turns isolation off,
+  * so every query runs on the executor's default classloader and reuses
+  * the compiled code. The trade-off: artifacts (JARs, files) added to
+  * one session become visible to every other non-isolated session of
+  * the same Spark instance. The engine adds none; a multi-tenant or
+  * Spark Connect deployment that needs per-session JAR isolation sets
+  * the conf back to `true` on its own builder.
   */
 object GraftSession {
 
@@ -120,6 +136,13 @@ object GraftSession {
       // worst single query (q98) 4.6 s → 0.9 s once its generated
       // code stopped being evicted between reps.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // Share that cache across streaming queries (see the object
+      // scaladoc): with artifact isolation on, every new streaming
+      // query gets its own executor classloader, hence its own cache
+      // keys, and each `TripStreamJob.start` drain recompiled its state
+      // encoders, input deserializer and whole-stage stages (31 janino
+      // compiles per drain after warm-up; 0 with isolation off).
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // harness events.parquet uses TIMESTAMP(NANOS), unreadable by
       // Spark 4 without this (read as raw nanos, converted by callers).
       // SESSION-GLOBAL: every parquet read on the session sees nanos

@@ -7,7 +7,11 @@ import org.apache.spark.sql.SparkSession
   * `queryExecution.toRdd.count()`) with a listener that splits wall time
   * into scheduled-job time vs driver-only gaps (analysis/optimization/
   * codegen/collect-free planning), and reports per-stage task time,
-  * shuffle bytes and spill. The missing Spark-UI view for a headless
+  * shuffle bytes and spill, plus the codegen layer: janino compiles
+  * (`CodegenMetrics` compilation count) and compile time
+  * (`CodeGenerator.compileTime`) per rep. In local mode executor tasks
+  * compile in the driver JVM, so both counters cover every compile the
+  * query paid. The missing Spark-UI view for a headless
   * optimization loop: "is this query executor-bound or driver-bound,
   * and in which stage?"
   *
@@ -54,6 +58,11 @@ object QueryProfile {
     def reset(): Unit = { stages.clear(); jobWallMs = 0; nJobs = 0; jobStart.clear() }
   }
 
+  /** (janino compiles so far, their total compile time in ns), JVM-wide. */
+  private def codegenCounters(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     System.setProperty("graft.lane", "bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -75,15 +84,19 @@ object QueryProfile {
       (1 to reps).foreach { rep =>
         probe.reset()
         spark.sparkContext.setJobDescription(s"$name rep$rep")
+        val (compiles0, compileNs0) = codegenCounters()
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
         val wallMs = (System.nanoTime() - t0) / 1000000
         Thread.sleep(300) // let straggling listener events drain
+        val (compiles1, compileNs1) = codegenCounters()
         val sumStageWall = probe.stages.values.map(_.wallMs).sum
         println(f"==== $name rep$rep wall=${wallMs / 1000.0}%.2fs rows=$rows " +
           f"jobs=${probe.nJobs} jobWall=${probe.jobWallMs / 1000.0}%.2fs " +
           f"driverGap=${(wallMs - probe.jobWallMs) / 1000.0}%.2fs " +
-          f"stageWallSum=${sumStageWall / 1000.0}%.2fs")
+          f"stageWallSum=${sumStageWall / 1000.0}%.2fs " +
+          f"compiles=${compiles1 - compiles0} " +
+          f"compileMs=${(compileNs1 - compileNs0) / 1e6}%.1f")
         if (rep == reps) { // only print stage detail on the last (warm) rep
           probe.stages.toSeq.sortBy(-_._2.taskTimeMs).take(12).foreach {
             case (id, a) =>

@@ -333,18 +333,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** LSH candidate pairs straight from a text column. */
-  def minhashCandidates(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 3): DataFrame =
-    candidatesFromSigs(
-      minhashSignatures(df, idCol, textCol, numHashes, shingleSize),
-      numHashes, bands)
-
   /** Candidate pairs with their estimated Jaccard (fraction of equal
     * signature components), filtered at `minJaccard`. Signatures are
     * materialized once and shared by candidate generation and

@@ -42,10 +42,11 @@ object Par {
     // execution) is needed. Unknown-partitioning plans split two ways:
     // narrow-over-leaf chains (scans, pinned frames, projections —
     // every internal call site) probe `.rdd` as before, which runs no
-    // stages there; anything containing a shuffle-inducing operator
-    // takes the conservative branch — a deterministic keyed repartition
-    // (AQE coalesces it right back at real widths) instead of a probe
-    // that would execute those stages eagerly and duplicate their work.
+    // stages there; anything containing a shuffle-inducing or
+    // broadcast operator takes the conservative branch — a
+    // deterministic keyed repartition (AQE coalesces it right back at
+    // real widths) instead of a probe that would execute those stages
+    // eagerly and duplicate their work.
     val staticN = plan.outputPartitioning.numPartitions
     val n =
       if (staticN > 0) staticN
@@ -54,6 +55,11 @@ object Par {
           case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => true
           case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => true
           case _: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => true
+          // a broadcast's build side is its own job: `.rdd` under AQE
+          // would materialize it eagerly just to count partitions
+          case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => true
+          case _: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => true
+          case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => true
           case _: org.apache.spark.sql.execution.aggregate.HashAggregateExec => true
           case _: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => true
           case _: org.apache.spark.sql.execution.aggregate.SortAggregateExec => true

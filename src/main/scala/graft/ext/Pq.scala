@@ -88,6 +88,9 @@ object Pq {
       if (sampleN >= total) {
         val full = pinned.collect()
           .map(_.getSeq[Number](0).map(_.doubleValue()).toArray)
+        val ragged = full.indexWhere(_.length != dim)
+        require(ragged < 0, s"vector $ragged of '$vecCol' has length " +
+          s"${full(ragged).length}, expected dim=$dim")
         (0 until m).toVector.map { j =>
           val sliced = full.map(v =>
             java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))

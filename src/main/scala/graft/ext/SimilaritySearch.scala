@@ -776,6 +776,9 @@ object SimilaritySearch {
     val rnd = new scala.util.Random(seed)
     val n = sample.length
     val dim = sample(0).length
+    val ragged = sample.indexWhere(_.length != dim)
+    require(ragged < 0, s"ragged sample: vector $ragged has length " +
+      s"${sample(ragged).length}, expected $dim (the length of vector 0)")
     val kk = math.min(k, n)
     var cents: Array[Array[Double]] =
       rnd.shuffle(sample.toVector).take(kk).map(_.clone).toArray

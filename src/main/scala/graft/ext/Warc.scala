@@ -229,26 +229,6 @@ object Warc {
       octet_length(http).cast("string"), lit("\r\n\r\n"), http, lit("\r\n\r\n"))
   }
 
-  /** Deterministic WARC files from `(idCol, uriCol, bodyCol)` rows:
-    * `numFiles` files keyed by `id % numFiles`, each a `warcinfo`
-    * record followed by that file's response records in ascending id
-    * order. Assembly is one hash aggregation (sort_array of
-    * (id, record) structs, field-extracted without a lambda — the
-    * extractText reassembly shape). Output: `(file_id string,
-    * payload binary)`.
-    */
-  /** Adapt parsed response records to the corpus schema
-    * [[TextPipeline.cleanCorpus]] consumes (with `htmlInput = true`
-    * when bodies are HTML): `(doc_id = target URI, text = body decoded
-    * UTF-8)`. The [[Pdf.textCorpus]] counterpart for web archives —
-    * compose `parseGzipRecords`-based variants the same way.
-    */
-  def responseCorpus(files: DataFrame, fileIdCol: String, payloadCol: String): DataFrame =
-    parseRecords(files, fileIdCol, payloadCol).toDF()
-      .where(col("warc_type") === "response" && col("http_status") === 200)
-      .select(col("target_uri").as("doc_id"),
-        decode(col("body"), "UTF-8").as("text"))
-
   // warcinfo record template, single source for the column-algebra and
   // Scala fixture spellings (the @FILE@ hole is the file id)
   private val InfoBody = "software: graft-warc-fixture\r\n"
@@ -258,6 +238,14 @@ object Warc {
   private val InfoPost =
     s">\r\nContent-Type: application/warc-fields\r\nContent-Length: ${InfoBody.length}\r\n\r\n$InfoBody\r\n\r\n"
 
+  /** Deterministic WARC files from `(idCol, uriCol, bodyCol)` rows:
+    * `numFiles` files keyed by `id % numFiles`, each a `warcinfo`
+    * record followed by that file's response records in ascending id
+    * order. Assembly is one hash aggregation (sort_array of
+    * (id, record) structs, field-extracted without a lambda — the
+    * extractText reassembly shape). Output: `(file_id string,
+    * payload binary)`.
+    */
   def responseFixture(
       df: DataFrame,
       idCol: String,

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{FirstMatchingBand, LangScores, SigMatchCount}
+import org.apache.spark.sql.graft.{FirstMatchingBand, SigMatchCount}
 
 /** Engine-native column functions backed by custom Catalyst expressions
   * (used where the built-in higher-order-function spelling falls out of
@@ -17,9 +17,4 @@ object GraftFunctions {
     */
   def firstMatchingBand(a: Column, b: Column, rowsPerBand: Column): Column =
     FirstMatchingBand.column(a, b, rowsPerBand)
-
-  /** All five language-ID stopword scores (`LangId.langs` order) in one
-    * text walk.
-    */
-  def langScores(text: Column): Column = LangScores.column(text)
 }

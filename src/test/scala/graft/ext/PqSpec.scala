@@ -350,4 +350,17 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
     assert(rSum > dSum, s"residual recall sum $rSum did not beat direct $dSum")
     assert(rSum >= 0.4 * queries.size, s"residual recall too low: $rSum over ${queries.size} queries")
   }
+
+  test("fit: the shared-collect fast path rejects a vector shorter than dim") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
+      (1L, Array(0.0f, 1.0f)),
+      (2L, Array(0.0f, 0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Pq.fit(df, "embedding", dim = 4, m = 2, k = 2, sampleN = 10)
+    }
+    assert(e.getMessage.contains("has length 2, expected dim=4"), e.getMessage)
+  }
 }

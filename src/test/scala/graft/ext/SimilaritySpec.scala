@@ -516,4 +516,11 @@ class SimilaritySpec extends AnyFunSuite with Matchers with SparkTestBase {
       rows.map(_._3).distinct should have size 5
     }
   }
+
+  test("lloydSeeded rejects a ragged sample, naming both lengths") {
+    val sample = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0), Array(0.0, 0.0, 1.0))
+    val e = the[IllegalArgumentException] thrownBy
+      lloydSeeded(sample, k = 2, iters = 3, seed = 7L, spherical = false)
+    e.getMessage should include("vector 1 has length 2, expected 3")
+  }
 }
