@@ -15,7 +15,7 @@ object AnnRecallAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-ann-recall")
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val e = graft.ingest.ParquetRead.read(spark, s"$sfDir/embeddings.parquet")
     val n = e.count()
     val q = e.where(col("vec_id") === 0L).select(col("embedding"))
       .head.getSeq[Float](0).map(_.toDouble)

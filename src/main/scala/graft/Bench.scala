@@ -53,7 +53,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT + codegen + parquet reader paths, so the first
     // timed query doesn't carry JVM cold-start noise.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.ingest.ParquetRead.read(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().queryExecution.toRdd.count()
     // Optional subset for local iteration (the driver leaves this unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

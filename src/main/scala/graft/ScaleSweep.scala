@@ -93,7 +93,7 @@ object ScaleSweep {
     }
     rm(dest); dest.mkdirs()
 
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = graft.ingest.ParquetRead.read(spark, s"$srcDir/documents.parquet")
     (0 until mult).map { k =>
       if (k == 0) docs
       else {
@@ -112,7 +112,7 @@ object ScaleSweep {
     }.reduce(_.unionByName(_))
       .write.mode("overwrite").parquet(s"$destDir/documents.parquet")
 
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val emb = graft.ingest.ParquetRead.read(spark, s"$srcDir/embeddings.parquet")
     (0 until mult).map { k =>
       if (k == 0) emb
       else emb.select(
@@ -123,7 +123,7 @@ object ScaleSweep {
     }.reduce(_.unionByName(_))
       .write.mode("overwrite").parquet(s"$destDir/embeddings.parquet")
 
-    val ev = spark.read.parquet(s"$srcDir/events.parquet")
+    val ev = graft.ingest.ParquetRead.read(spark, s"$srcDir/events.parquet")
     (0 until mult).map { k =>
       if (k == 0) ev
       else ev.select(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.KpiAggregation
 import graft.ext.{Dedup, MediaCodec, Multimodal, Sampling, SimilaritySearch, TextAnalysis, TextPipeline, LangId}
-import graft.ingest.EventReader
+import graft.ingest.{EventReader, ParquetRead}
 
 /** Driver contract — one named query per implemented operator family
   * (SURVEY.md §2 + the LLM-pipeline extensions), each with a DuckDB
@@ -21,7 +21,7 @@ import graft.ingest.EventReader
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetRead.read(s, s"$dir/$name.parquet")
 
   /** Root for oracle-visible generated fixtures. The realistic
     * synthetic corpus is built with scala.util.Random, which has no
@@ -90,7 +90,7 @@ object SparkEntry {
           fixtureWritten.add((name, n)): Unit
         }
       }
-      s.read.parquet(path)
+      ParquetRead.read(s, path)
     }
   }
 
@@ -150,7 +150,7 @@ object SparkEntry {
           fixtureWritten.add(("planted_media", plantedMediaRows.size.toLong)): Unit
         }
       }
-      s.read.parquet(path).as[Multimodal.MediaRow]
+      ParquetRead.read(s, path).as[Multimodal.MediaRow]
     }
   }
 
@@ -2741,7 +2741,7 @@ object SparkEntry {
               .where(col("allowed")).drop("allowed")
             val seenSoFar =
               if (fs.exists(new org.apache.hadoop.fs.Path(admittedDir)))
-                seen.unionByName(s.read.parquet(admittedDir))
+                seen.unionByName(ParquetRead.read(s, admittedDir))
               else seen
             val fresh = graft.ext.BloomGate
               .bloomedAntiJoin(admitted, "url", seenSoFar, "url", fpp = 0.01)
@@ -2755,7 +2755,7 @@ object SparkEntry {
             "q125 streaming replay did not terminate within 600s")
         }
         graft.ext.Robots
-          .schedule(s.read.parquet(admittedDir), "url", delays,
+          .schedule(ParquetRead.read(s, admittedDir), "url", delays,
             agent = "graftbot", defaultDelaySec = 1.0)
           .orderBy(col("url"))
           .localCheckpoint() // materialize before the temp dirs vanish
@@ -3618,7 +3618,7 @@ object SparkEntry {
           throw new IllegalStateException(
             "q162 streaming replay did not terminate within 600s")
         }
-        s.read.parquet(s"$base/joined")
+        ParquetRead.read(s, s"$base/joined")
           .groupBy(to_date(col("dropoff_datetime")).as("date"))
           .agg(count(lit(1)).as("n_trips"),
             sum(col("fare_amount").cast("decimal(38,12)")).cast("double")
@@ -3725,7 +3725,7 @@ object SparkEntry {
           throw new IllegalStateException(
             "q166 streaming replay did not terminate within 600s")
         }
-        s.read.parquet(s"$base/out")
+        ParquetRead.read(s, s"$base/out")
           .groupBy(to_date(col("ts")).as("date"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(38,12)")).cast("double")
@@ -4045,7 +4045,7 @@ object SparkEntry {
         graft.sink.ManifestTable.append(
           docs.where(pmod(col("doc_id"), lit(2)) === 1), table)
         drain(2)
-        s.read.parquet(outDir)
+        ParquetRead.read(s, outDir)
           .orderBy(col("doc_id"))
           .localCheckpoint() // materialize before the temp dirs vanish
       } finally {
@@ -4182,7 +4182,7 @@ object SparkEntry {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (groups, withBloom, might) = graft.plans.Layout.bloomAudit(
           s, s"$base/t", "event_id", Seq(lo, lo - 1, hi + 1))
-        val absentEmpty = s.read.parquet(s"$base/t")
+        val absentEmpty = ParquetRead.read(s, s"$base/t")
           .where(col("event_id") === lo - 1).count() == 0L
         import s.implicits._
         Seq((groups.toLong, withBloom == groups && groups >= 1,
@@ -4380,7 +4380,7 @@ object SparkEntry {
           throw new IllegalStateException(
             "q185 streaming replay did not terminate within 600s")
         }
-        s.read.parquet(s"$base/out")
+        ParquetRead.read(s, s"$base/out")
           .where(col("user_id") >= 0)
           .select(col("user_id"),
             unix_timestamp(col("session_window.start")).as("session_start"),

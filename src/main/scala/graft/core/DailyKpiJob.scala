@@ -33,7 +33,7 @@ object DailyKpiJob {
     // append-delta table a redelivered completion appends a second row
     // per trip, and aggregating raw rows would double-count it.
     val day = graft.sink.TripTableSink.mergedView(
-      spark.read.parquet(tablePath)
+      graft.sink.TripTableSink.read(spark, tablePath)
         .where(col("date") === to_date(lit(target))))
     val docs = KpiAggregation.kpiDocument(KpiAggregation.dailyKpis(day))
     KpiJsonSink.writeDaily(docs, outDir)

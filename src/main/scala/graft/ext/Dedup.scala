@@ -546,7 +546,7 @@ object Dedup {
       bands: Int = 0,
       shingleSize: Int = 3,
       sigMode: SigMode = SigMode.Xxhash64): DataFrame = {
-    val indexSigs = newDocs.sparkSession.read.parquet(s"$path/sigs")
+    val indexSigs = graft.ingest.ParquetRead.read(newDocs.sparkSession, s"$path/sigs")
     // The signature family is part of the index's identity: a mismatch
     // would slice band hashes over truncated signatures (or compare
     // different shingle vocabularies) and silently UNDER-estimate every

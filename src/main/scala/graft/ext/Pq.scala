@@ -430,15 +430,15 @@ object Pq {
       else fs.listStatus(root).toSeq.filter(s =>
         fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_committed")))
         .map(s => new org.apache.hadoop.fs.Path(s.getPath, "codes").toString)
-    committed.foldLeft(spark.read.parquet(s"$path/codes"))(
-      (acc, p) => acc.unionByName(spark.read.parquet(p)))
+    committed.foldLeft(graft.ingest.ParquetRead.read(spark, s"$path/codes"))(
+      (acc, p) => acc.unionByName(graft.ingest.ParquetRead.read(spark, p)))
   }
 
   /** Reload `(coarseCentroids, model)` from a [[writeIvfPqIndex]] dir. */
   def readIvfPqIndexModel(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[Seq[Double]], PqModel) = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
+    val meta = graft.ingest.ParquetRead.read(spark, s"$path/meta").collect()
     val dim = meta.head.getAs[Int]("dim")
     def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
       r.getSeq[Double](r.fieldIndex("vec")).toSeq

@@ -900,7 +900,7 @@ object SimilaritySearch {
       excludeId: Option[Long] = None,
       spherical: Boolean = false): DataFrame =
     topKByCosine(
-      spark.read.parquet(path).where(
+      graft.ingest.ParquetRead.read(spark, path).where(
         col("cell").isin(probeCellsFor(query, centroids, nProbe, spherical): _*)),
       idCol, vecCol, query, k, excludeId)
 

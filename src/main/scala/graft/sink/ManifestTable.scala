@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
+import graft.ingest.ParquetRead
+
 /** Snapshot-isolated parquet table with a manifest log — the minimal
   * time-travel table format (the Delta/Iceberg idea reduced to its
   * load-bearing core): data files are IMMUTABLE once written, and a
@@ -395,8 +397,8 @@ object ManifestTable {
       s"versions $fromVersion -> $toVersion are not append-only " +
         s"(dirs were rewritten); use diff() for the general case")
     val added = to.filterNot(from.contains).map(d => new Path(path, d).toString)
-    if (added.isEmpty) spark.read.parquet(new Path(path, to.head).toString).limit(0)
-    else spark.read.parquet(added: _*)
+    if (added.isEmpty) ParquetRead.read(spark, new Path(path, to.head).toString).limit(0)
+    else ParquetRead.read(spark, added: _*)
   }
 
   /** Read an exact historical version. With `mergeSchema` the read
@@ -411,7 +413,8 @@ object ManifestTable {
       s"version $version not committed at $path")
     val dirs = readManifest(spark, path, version)
       .map(d => new Path(path, d).toString)
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(dirs: _*)
+    if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    else ParquetRead.read(spark, dirs: _*)
   }
 
   /** Read the table head. */

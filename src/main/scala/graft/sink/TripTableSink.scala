@@ -3,7 +3,9 @@ package graft.sink
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.ingest.ParquetRead
 import graft.schema.TripSchemas
 
 /** Keyed upsert sink for the trips table (SURVEY.md §2.1 S7/S8).
@@ -28,6 +30,21 @@ import graft.schema.TripSchemas
 object TripTableSink {
 
   private val seqCol = "__graft_seq"
+
+  /** The columns an append-delta table reads with: the trip record's
+    * columns, the epoch column, then the `date` partition column. */
+  private lazy val emptyTableSchema: StructType = StructType(
+    (TripSchemas.tripRecordSchema.filterNot(_.name == "date") :+
+      StructField(seqCol, LongType) :+ TripSchemas.tripRecordSchema("date"))
+      .map(_.copy(nullable = true)))
+
+  /** The raw rows of the table at `path`, every epoch's (see
+    * [[readMerged]] for the last-write-wins view). An epoch whose
+    * micro-batch emitted no rows leaves only `_SUCCESS` behind; a table
+    * holding no data file yet reads as empty, not as a schema-inference
+    * error. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    ParquetRead.readOrEmpty(spark, emptyTableSchema, path)
 
   /** Row precedence within one epoch: a Completed record must never be
     * shadowed by the Started emitted in the same micro-batch (Update
@@ -60,7 +77,7 @@ object TripTableSink {
     val merged =
       if (!tableExists(spark, path)) lastWriteWins(incoming)
       else {
-        val existing0 = spark.read.parquet(path)
+        val existing0 = read(spark, path)
         // An append-delta table already carries real epochs — keep them
         // so merge order stays correct if upsert runs over one (e.g. a
         // backfill); snapshot tables get a below-everything sentinel.
@@ -121,7 +138,7 @@ object TripTableSink {
     * dates actually read — combine with a `date` filter for pruning.
     */
   def readMerged(spark: SparkSession, path: String): DataFrame =
-    mergedView(spark.read.parquet(path))
+    mergedView(read(spark, path))
 
   /** Last-write-wins view over an already-loaded (and possibly
     * date-pruned) frame. Snapshot/upsert tables carry no epoch column
@@ -152,10 +169,10 @@ object TripTableSink {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     // A scheduled compaction of a not-yet-populated table is a no-op:
-    // missing path, or a table with schema but zero rows (max(seq) is
-    // null — getLong would NPE).
+    // missing path, or a table with zero rows or no data file at all
+    // (max(seq) is null — getLong would NPE).
     if (!tableExists(spark, path)) return
-    val current0 = spark.read.parquet(path)
+    val current0 = read(spark, path)
     val current =
       if (current0.columns.contains(seqCol)) current0
       else current0.withColumn(seqCol, lit(0L))

@@ -263,7 +263,7 @@ object StreamBench {
         Thread.sleep(100); waited3 += 1
       }
       spark.streams.removeListener(m3)
-      val matched = spark.read.parquet(s"$base/run3-$p/joined").count()
+      val matched = graft.ingest.ParquetRead.read(spark, s"$base/run3-$p/joined").count()
       println(
         s"""{"metric":"stream_join_bounded_state","provider":"$p","value":${(m3.inputRows / secs3).round},""" +
           s""""unit":"rows/sec","rows":${m3.inputRows},"wall_sec":$secs3,""" +

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkTestBase
-import graft.schema.TripSchemas
+import graft.core.{DailyKpiJob, TripCorrelation}
+import graft.schema.{TripEnd, TripSchemas, TripStart}
 
 class TripTableSinkSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
@@ -101,5 +102,29 @@ class TripTableSinkSpec extends AnyFunSuite with Matchers with SparkTestBase {
       .orderBy("trip_id").collect()
     merged.map(_.getAs[String]("status")) shouldBe
       Array(TripSchemas.StatusCompleted, TripSchemas.StatusStarted)
+  }
+
+  test("a table whose only epoch emitted no rows reads as an empty trip table") {
+    import spark.implicits._
+    val path = tmp()
+    val starts = Seq.empty[TripStart].toDS().toDF()
+    val ends = Seq.empty[TripEnd].toDS().toDF()
+    TripTableSink.appendDelta(TripCorrelation.correlate(starts.limit(0), ends.limit(0)), path, 0L)
+    def visible() = new java.io.File(path).list().toSeq.filterNot(_.startsWith("."))
+    visible() shouldBe Seq("_SUCCESS")
+
+    // the same columns, in the same order, as a table with rows
+    val populated = tmp()
+    TripTableSink.appendDelta(TripCorrelation.correlate(
+      Seq(TripStart("t1", None, None, None, Some(Timestamp.valueOf("2024-05-25 10:00:00")),
+        None, Some(5.0))).toDS().toDF(), ends), populated, 0L)
+    TripTableSink.read(spark, path).schema shouldBe TripTableSink.read(spark, populated).schema
+
+    val merged = TripTableSink.readMerged(spark, path)
+    merged.schema shouldBe TripTableSink.readMerged(spark, populated).schema
+    merged.count() shouldBe 0L
+    noException should be thrownBy TripTableSink.compact(spark, path)
+    visible() shouldBe Seq("_SUCCESS")
+    DailyKpiJob.run(spark, path, tmp() + "/kpi", Some("2024-05-25")) shouldBe empty
   }
 }
