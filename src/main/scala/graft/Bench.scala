@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs the headline queries ([[SparkEntry.benchQueries]])
   * on `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -46,44 +46,19 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt.max(0)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JIT + codegen + parquet reader paths, so the first
-    // timed query doesn't carry JVM cold-start noise.
-    graft.ingest.ParquetRead.read(spark, s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().queryExecution.toRdd.count()
+    val spark = GraftSession.local(cpus, "graft-bench")
+    warmUp(spark, sfDir)
     // Optional subset for local iteration (the driver leaves this unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-    def timedRun(name: String): (Double, Long) = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val rows = try {
-        fn(spark, sfDir).queryExecution.toRdd.count() // full materialization
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          throw e
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // Each rep pays its OWN localCheckpoints inside its timed region;
-      // dropping them afterwards keeps every timing independent of
-      // earlier reps'/queries' accumulated cached blocks (storage
-      // eviction / GC churn showed up as per-query outliers in
-      // cross-environment runs).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      (sec, rows)
-    }
+    def run(name: String): (Double, Long) =
+      timedRun(spark, name)(SparkEntry.queries(name)(spark, sfDir))
 
     val firstPass = SparkEntry.benchQueries
       .filter(n => only.forall(_.contains(n))).map { name =>
-        (1 to warmups).foreach(_ => timedRun(name)) // untimed, discarded
-        val runs = (1 to reps).map(_ => timedRun(name))
+        (1 to warmups).foreach(_ => run(name)) // untimed, discarded
+        val runs = (1 to reps).map(_ => run(name))
         (name, runs.map(_._1).min, runs.head._2, runs.map(_._1))
       }
     // Contention guard: min-of-2 can't absorb a machine-wide slow window
@@ -116,7 +91,7 @@ object Bench {
     val results = firstPass.map { case (name, minSec, rows, runs) =>
       refTimes.get(name) match {
         case Some(ref) if minSec > ref * 3 && minSec > ref + 0.75 =>
-          val (retrySec, _) = timedRun(name)
+          val (retrySec, _) = run(name)
           retried(name) = (minSec, retrySec, ref)
           (name, math.min(minSec, retrySec), rows, runs :+ retrySec)
         case _ => (name, minSec, rows, runs)
@@ -183,10 +158,41 @@ object Bench {
     spark.stop()
   }
 
+  /** Untimed warm-up: JIT + codegen + parquet reader paths, so the first
+    * timed query doesn't carry JVM cold-start noise.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    graft.ingest.ParquetRead.read(spark, s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count().queryExecution.toRdd.count(): Unit
+
+  /** Wall seconds and row count of building `frame` and forcing every
+    * output column of every row through `queryExecution.toRdd`. A
+    * failure is reported under `name` on stderr and rethrown.
+    *
+    * Each call pays its OWN localCheckpoints inside its timed region;
+    * every persisted RDD is released afterwards, which keeps each timing
+    * independent of earlier reps'/queries' accumulated cached blocks
+    * (storage eviction / GC churn showed up as per-query outliers in
+    * cross-environment runs).
+    */
+  private[graft] def timedRun(spark: SparkSession, name: String)(
+      frame: => DataFrame): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val rows = try frame.queryExecution.toRdd.count() catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        throw e
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    (sec, rows)
+  }
+
   /** Locale-pinned 3-decimal seconds: the default-locale `f"%.3f"`
     * prints a COMMA decimal separator under de/fr JVMs, corrupting the
     * JSON artifact of record.
     */
-  private def fmt3(v: Double): String =
+  private[graft] def fmt3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 }

@@ -167,13 +167,8 @@ object GraftSession {
     // into the repo working directory; removed on JVM exit so repeated
     // runs don't leak table copies into the temp dir
     val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(warehouse.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(warehouse.toFile): Unit))
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
       shufflePartitions = math.max(cores, 4)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query time attribution: runs named queries (bench methodology —
   * `queryExecution.toRdd.count()`) with a listener that splits wall time
@@ -77,14 +76,9 @@ object QueryProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt.max(1)
     val names = args.filterNot(_.startsWith("--"))
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-profile"),
-      shufflePartitions = cpus
-    ).getOrCreate()
+    val spark = GraftSession.local(cpus, "graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    // same global warmup as Bench
-    graft.ingest.ParquetRead.read(spark, s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().queryExecution.toRdd.count()
+    Bench.warmUp(spark, sfDir)
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)
     def mb(b: Long): String = f"${b / 1048576.0}%.1fMB"
@@ -93,13 +87,15 @@ object QueryProfile {
         probe.reset()
         spark.sparkContext.setJobDescription(s"$name rep$rep")
         val (compiles0, compileNs0) = codegenCounters()
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        // a build job has finished before the entry returns; a job of the
-        // timed count is submitted after it
-        val builtAtMs = System.currentTimeMillis()
-        val rows = df.queryExecution.toRdd.count()
-        val wallMs = (System.nanoTime() - t0) / 1000000
+        var builtAtMs = 0L
+        val (sec, rows) = Bench.timedRun(spark, name) {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          // a build job has finished before the entry returns; a job of
+          // the timed count is submitted after it
+          builtAtMs = System.currentTimeMillis()
+          df
+        }
+        val wallMs = (sec * 1000).toLong
         Thread.sleep(300) // let straggling listener events drain
         val (compiles1, compileNs1) = codegenCounters()
         val buildJobs = probe.startTimes.count(_ < builtAtMs)
@@ -120,8 +116,6 @@ object QueryProfile {
                 f"sw=${mb(a.shuffleWriteB)}%9s spill=${mb(a.spillB)}%9s  ${a.name.take(80)}")
           }
         }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
       }
     }
     spark.stop()

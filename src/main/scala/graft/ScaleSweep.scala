@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-proof sweep (BENCH_NOTES §scale-sweep): runs the heavy-tail
@@ -87,11 +88,8 @@ object ScaleSweep {
     // destroyed (ADVICE r20)
     require(dest.getPath.contains("graft-sweep-"),
       s"blowUp destDir must be a graft-sweep-* cache dir, got $destDir")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(dest); dest.mkdirs()
+    // fullyDelete removes a symlink inside the dir, never its target
+    FileUtil.fullyDelete(dest); dest.mkdirs()
 
     val docs = graft.ingest.ParquetRead.read(spark, s"$srcDir/documents.parquet")
     (0 until mult).map { k =>
@@ -149,11 +147,7 @@ object ScaleSweep {
     val targets = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultTargets)
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scale-sweep"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "graft-scale-sweep")
 
     val srcTag = new java.io.File(srcDir).getName
     for (m <- mults) {
@@ -165,21 +159,13 @@ object ScaleSweep {
           d
         }
       for (name <- targets) {
-        val fn = SparkEntry.queries(name)
-        def run(): (Double, Long) = {
-          val t0 = System.nanoTime()
-          val rows = fn(spark, dir).queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          (sec, rows)
-        }
-        val runs = (1 to reps).map(_ => run())
+        val runs = (1 to reps).map(_ =>
+          Bench.timedRun(spark, name)(SparkEntry.queries(name)(spark, dir)))
         val sec = runs.map(_._1).min
         println(s"""{"metric":"scale_sweep","query":${JsonUtil.quote(name)},""" +
-          s""""mult":$m,"sec":${"%.3f".formatLocal(java.util.Locale.ROOT, sec)},""" +
+          s""""mult":$m,"sec":${Bench.fmt3(sec)},""" +
           s""""rows":${runs.head._2},""" +
-          s""""runs":[${runs.map(r => "%.3f".formatLocal(java.util.Locale.ROOT, r._1)).mkString(",")}],""" +
+          s""""runs":[${runs.map(r => Bench.fmt3(r._1)).mkString(",")}],""" +
           s""""cpus":$cpus,"src":${JsonUtil.quote(srcDir)}}""")
       }
     }

@@ -320,13 +320,8 @@ object SparkEntry {
       // task failure) must not leak a partial feed dir — and a failed
       // computeIfAbsent caches nothing, so the next call retries into
       // a new dir with its own hook
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(feed))
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(feed)): Unit))
       EventReader.toJsonStream(starts, "trip_id", 4).select("value")
         .write.text(s"$feed/starts")
       EventReader.toJsonStream(ends, "trip_id", 4).select("value")

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.FileUtil
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * The session goes through [[GraftSession.configure]] so correctness is
+  * The session comes from [[GraftSession.local]] so correctness is
   * verified under the SAME engine configuration Bench measures (AQE,
   * skew-join, parquet pushdown, nanos handling) — a results bug caused
   * by a production setting must not be invisible to the oracle.
@@ -19,11 +19,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Clear the oracle-visible fixture root: its dirs are size-scoped
     // (name-N) and the oracle SQL globs name-*, so a stale corpus from
@@ -33,7 +29,7 @@ object Verify {
     // SparkEntry.FixtureDir is the single source of truth — the same
     // value the oracle SQL globs and persistedRealistic writes, so the
     // clear can never drift onto a different directory.
-    deleteRecursively(new java.io.File(SparkEntry.FixtureDir))
+    FileUtil.fullyDelete(new java.io.File(SparkEntry.FixtureDir))
     // oracle_sql.json FIRST: it is pure metadata, and the downstream
     // compare degenerates to {} without it. Writing it before the query
     // loop means any driver-side time cap that kills the JVM mid-dump
@@ -67,7 +63,7 @@ object Verify {
               // Remove any stale result from a previous run: a leftover
               // parquet dir would let the compare silently validate old
               // output and mask the regression.
-              deleteRecursively(new java.io.File(target))
+              FileUtil.fullyDelete(new java.io.File(target))
           }
           System.err.flush()
         }
@@ -76,10 +72,5 @@ object Verify {
     tasks.foreach(_.get())
     pool.shutdown()
     spark.stop()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

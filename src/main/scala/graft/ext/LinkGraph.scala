@@ -28,16 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
-  /** A finished run with its diagnostics: per-iteration wall seconds
-    * (each iteration's localCheckpoint forces materialization, so the
-    * timings are real), and the L1 residual `Σ|r_k − r_{k−1}|` between
-    * the last two iterates — the convergence evidence a fixed-iteration
-    * plan owes its reader.
+  /** A finished run with its diagnostic: the L1 residual
+    * `Σ|r_k − r_{k−1}|` between the last two iterates — the convergence
+    * evidence a fixed-iteration plan owes its reader.
     */
-  final case class PageRankRun(
-      ranks: DataFrame,
-      iterSeconds: Seq[Double],
-      l1Residual: Double)
+  final case class PageRankRun(ranks: DataFrame, l1Residual: Double)
 
   /** PageRank over `(srcCol, dstCol)` edge rows (parallel edges =
     * weight). Output: `(node, rank)` — node typed as the input column.
@@ -133,10 +128,8 @@ object LinkGraph {
         filled.select(col("v"), (col("rank") / mass).as("rank"))
       case None => nodes.select(col("v"), lit(1.0 / n).as("rank"))
     })
-    val times = Vector.newBuilder[Double]
     var it = 0
     while (it < iterations) {
-      val t0 = System.nanoTime()
       // The dangling mass rides as a broadcast 1-row aggregate inside
       // the SAME action that materializes the next iterate — the
       // former `.head()` collect was a second driver roundtrip (plan +
@@ -164,7 +157,6 @@ object LinkGraph {
       prevRdds = ranksRdds
       ranks = next
       ranksRdds = nextRdds
-      times += (System.nanoTime() - t0) / 1e9
       it += 1
     }
     val residual =
@@ -172,7 +164,7 @@ object LinkGraph {
       else ranks.as("a").join(prev.as("b"), col("a.v") === col("b.v"))
         .agg(sum(abs(col("a.rank") - col("b.rank"))))
         .head().getDouble(0)
-    PageRankRun(ranks.withColumnRenamed("v", "node"), times.result(), residual)
+    PageRankRun(ranks.withColumnRenamed("v", "node"), residual)
   }
 
   /** A finished HITS run: `(node, auth, hub)` scores plus the L1

@@ -427,10 +427,10 @@ object SimilaritySearch {
     * corpus grows (measured 0.0@10 at the sf0.1 fixture with 4 planes —
     * the true neighbors sit one hyperplane away from the query's bucket
     * and a single probe never sees them), while multi-probe at the same
-    * plane count measures ≥ 0.6 there (BENCH_NOTES.md, reproduce via
-    * `runMain graft.AnnRecallAudit`; floor asserted in
-    * EstimatorQualitySpec). Callers who want the 1-bucket probe cost
-    * and accept the recall loss must say so: [[annTopKSingleProbe]].
+    * plane count measures ≥ 0.6 there (BENCH_NOTES.md, "Estimator
+    * quality"; floor asserted in EstimatorQualitySpec). Callers who
+    * want the 1-bucket probe cost and accept the recall loss must say
+    * so: [[annTopKSingleProbe]].
     */
   def annTopK(
       df: DataFrame,

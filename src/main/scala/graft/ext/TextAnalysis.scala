@@ -512,7 +512,7 @@ object TextAnalysis {
     * alternative — pre-aggregating (doc, term) term frequencies —
     * shuffles a near-distinct (doc,term) stream the size of the corpus
     * and measured 6.9× wall at 4× docs; this form measured ~linear
-    * (CorpusScaleProbe).
+    * (BENCH_NOTES.md, "Degenerate vs realistic corpus").
     */
   def unigramCrossEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val terms = df.select(col(idCol),
@@ -521,7 +521,8 @@ object TextAnalysis {
     // [[crossDocDupFraction]] lesson) and derive the total from it —
     // an unpinned fan-out re-explodes the corpus once per branch
     // (model, total, scoring = 3 scans; measured 2× the whole query
-    // at 200k docs in CorpusScaleProbe before this fix)
+    // at 200k docs before this fix; BENCH_NOTES.md, "Degenerate vs
+    // realistic corpus")
     val model = terms.groupBy(col("__t")).agg(count(lit(1)).as("__cnt"))
       .localCheckpoint()
     val total = model.agg(sum(col("__cnt")).as("__N"))

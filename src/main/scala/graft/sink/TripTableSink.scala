@@ -102,19 +102,6 @@ object TripTableSink {
     finally conf.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
   }
 
-  /** foreachBatch hook for a streaming correlation query (merge-rewrite
-    * strategy; prefer [[foreachBatchAppend]] for short triggers).
-    */
-  def foreachBatchUpsert(path: String): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      // Materialize first: foreachBatch re-evaluates the batch plan per
-      // action, and upsert both reads and writes the target.
-      val spark = batch.sparkSession
-      val cached = batch.cache()
-      try upsert(spark, cached, path, epoch)
-      finally cached.unpersist()
-    }
-
   // -------------------------------------------------------------------
   // Delta-append strategy (scale path)
   // -------------------------------------------------------------------
@@ -124,9 +111,10 @@ object TripTableSink {
     * upstream task (state partitions, typically 32+) opens a writer in
     * every touched date dir, so one epoch lands tasks×dates small
     * files and the merge-on-read listing pays for it forever — the
-    * same small-files cliff ManifestProbe measures at 13-18×. With it,
-    * an epoch writes one file per touched date; the added shuffle
-    * moves only the micro-batch's own rows.
+    * same small-files cliff measured at 13-18× (BENCH_NOTES.md, "Round
+    * 14: manifest-table probe"). With it, an epoch writes one file per
+    * touched date; the added shuffle moves only the micro-batch's own
+    * rows.
     */
   def appendDelta(batch: DataFrame, path: String, epoch: Long): Unit =
     batch.withColumn(seqCol, lit(epoch))

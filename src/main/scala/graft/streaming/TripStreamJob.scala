@@ -17,9 +17,8 @@ import graft.sink.TripTableSink
   * — expressed as `Trigger.ProcessingTime("100 seconds")`; rate limiting
   * belongs to the source (`maxFilesPerTrigger` / `maxOffsetsPerTrigger`).
   *
-  * Sink strategy defaults to append-delta (O(batch) I/O per trigger);
-  * pass `appendMode = false` for the compact merge-rewrite sink when
-  * triggers are long and partitions small.
+  * The sink is append-delta: O(batch) I/O per trigger
+  * ([[TripTableSink.appendDelta]]).
   */
 object TripStreamJob {
 
@@ -32,21 +31,17 @@ object TripStreamJob {
       trigger: Trigger = Trigger.ProcessingTime("100 seconds"),
       faithful: Boolean = true,
       timeoutMs: Long = 0L,
-      watermarkDelay: String = "10 minutes",
-      appendMode: Boolean = true): StreamingQuery = {
+      watermarkDelay: String = "10 minutes"): StreamingQuery = {
     val starts = EventReader.decodeStartStream(spark, startLines)
     val ends = EventReader.decodeEndStream(spark, endLines)
     val events = EventReader.taggedUnion(spark, starts, ends)
     val records =
       TripCorrelation.correlateStream(events, faithful, timeoutMs, watermarkDelay)
-    val sink: (DataFrame, Long) => Unit =
-      if (appendMode) TripTableSink.foreachBatchAppend(tablePath)
-      else TripTableSink.foreachBatchUpsert(tablePath)
     records.toDF().writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(sink)
+      .foreachBatch(TripTableSink.foreachBatchAppend(tablePath))
       .start()
   }
 

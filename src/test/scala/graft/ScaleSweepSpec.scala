@@ -95,4 +95,18 @@ class ScaleSweepSpec extends AnyFunSuite with Matchers with SparkTestBase {
     ev.select(countDistinct(col("user_id"))).head.getLong(0) shouldBe 3
     ev.select(countDistinct(col("ts"))).head.getLong(0) shouldBe 2
   }
+
+  test("blow-up clears a stale destination without following its symlinks") {
+    val src = writeSrc()
+    val outside = Files.createTempDirectory("graft-sweep-spec-outside")
+    val kept = Files.writeString(outside.resolve("f.txt"), "keep")
+    // no _SWEEP_COMPLETE marker: blowUp deletes the dir before writing
+    val dest = Files.createTempDirectory("graft-sweep-spec-out").resolve("x2")
+    Files.createDirectories(dest)
+    Files.createSymbolicLink(dest.resolve("link"), outside)
+    ScaleSweep.blowUp(spark, src, 2, dest.toString)
+    Files.exists(kept) shouldBe true
+    Files.exists(dest.resolve("link"), java.nio.file.LinkOption.NOFOLLOW_LINKS) shouldBe false
+    spark.read.parquet(s"$dest/documents.parquet").count() shouldBe 8
+  }
 }
